@@ -121,32 +121,24 @@ object DataGen {
 
 /** Rate-controlled producer: drives [[DataGen]] through a traffic-pattern
   * governor into a topic (reference: producer.go:85-235 ticker loop +
-  * traffic_pattern.go piecewise rates). Instead of a wall-clock ticker,
-  * each tick's row budget is the exact integral of the rate over the tick
-  * window ([[TrafficPatterns.rowsBetween]]) — deterministic totals, no
-  * drift at high rates (documented divergence, SURVEY.md §7.4 risk 5). */
+  * traffic_pattern.go piecewise rates). Production runs in virtual time:
+  * instead of a wall-clock ticker, the row budget is the exact integral of
+  * the rate over the run ([[TrafficPatterns.rowsBetween]]), written in one
+  * `produce` — deterministic totals, no drift at high rates (documented
+  * divergence, SURVEY.md §7.4 risk 5). */
 object RatedProducer {
 
-  /** Produce synthetic rows for `durationMs` of virtual time in `tickMs`
-    * windows. Returns the total row count (= floor of the rate integral).
-    * `realTime=false` runs the loop flat out (tests, backfills);
-    * `realTime=true` paces ticks on the wall clock like the reference. */
+  /** Produce the synthetic rows of `durationMs` of virtual time in one
+    * write and return their count (= floor of the rate integral). The rows
+    * are those any split of the run into windows would write: window
+    * budgets telescope to the same total and [[DataGen.rows]] is a pure
+    * function of (seed, field, id). */
   def run(spark: SparkSession, topics: Topics, topic: String,
           schema: AvroSchemas.AvroSchema, patterns: TrafficPatterns,
-          durationMs: Long, tickMs: Long = 1000L, seed: Long = 42L,
-          realTime: Boolean = false): Long = {
-    var produced = 0L
-    var t = 0L
-    while (t < durationMs) {
-      val t1 = math.min(t + tickMs, durationMs)
-      val budget = patterns.rowsBetween(t, t1)
-      if (budget > 0) {
-        topics.produce(DataGen.rows(spark, schema, budget, startId = produced, seed = seed), topic)
-        produced += budget
-      }
-      if (realTime) Thread.sleep(t1 - t)
-      t = t1
-    }
-    produced
+          durationMs: Long, seed: Long = 42L): Long = {
+    val total = patterns.rowsBetween(0L, durationMs)
+    if (total > 0)
+      topics.produce(DataGen.rows(spark, schema, total, seed = seed), topic)
+    total
   }
 }

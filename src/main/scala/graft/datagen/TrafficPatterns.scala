@@ -9,8 +9,8 @@ package graft.datagen
   * validation checks adjacent pairs in input order, exactly like the
   * reference. `rateAt` is the piecewise-constant rate; [[rowsBetween]] is
   * the round-2 addition the Spark governor uses: the exact integral over
-  * a micro-batch window, so per-batch row budgets sum to the exact total
-  * instead of accumulating ticker drift (SURVEY.md §7.4 risk 5).
+  * a window, so budgets of adjacent windows sum to the exact total instead
+  * of accumulating ticker drift (SURVEY.md §7.4 risk 5).
   */
 final case class TrafficPattern(startMs: Long, endMs: Long, multiplier: Double)
 

@@ -246,11 +246,14 @@ object GraftRunner {
         }
       }
 
-      // 9: validate output
+      // 9: validate output. A missing or empty output topic is 0 rows; any
+      // other read failure (a corrupt topic) fails the run instead of
+      // passing as an empty SUCCESS.
       val outputSchema = schemas.get("output").map(_.structType).getOrElse(inputSchema)
       val outputRows =
-        try topics.readAll(spark, resources.outputTopic, outputSchema).count()
-        catch { case _: Exception => 0L }
+        if (topics.topicExists(resources.outputTopic))
+          topics.readAll(spark, resources.outputTopic, outputSchema).count()
+        else 0L
 
       val status =
         if (cfg.expectedOutputRows.forall(outputRows >= _)) "SUCCESS" else "INCOMPLETE"

@@ -1,5 +1,7 @@
 package graft.datagen
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.SparkSpec
 import graft.avro.AvroSchemas
 
@@ -95,8 +97,7 @@ class DataGenSpec extends SparkSpec {
     val t = graft.streaming.FileTopics(
       java.nio.file.Files.createTempDirectory("graft-datagen").toString)
     val tp = TrafficPatterns.parse("2s-4s:300%", 5) // 5/s; 15/s in [2s,4s)
-    val produced = RatedProducer.run(spark, t, "gen-topic", schema, tp,
-      durationMs = 6000, tickMs = 500)
+    val produced = RatedProducer.run(spark, t, "gen-topic", schema, tp, durationMs = 6000)
     // integral: 5*4 + 15*2 = 50
     assert(produced == 50)
     val back = t.readAll(spark, "gen-topic", schema.structType)
@@ -104,5 +105,40 @@ class DataGenSpec extends SparkSpec {
     // ids are contiguous across ticks (resumable determinism)
     assert(back.select("event_id").collect().map(_.getString(0)).toSet ==
       (0 until 50).map(i => s"event_id-$i").toSet)
+  }
+
+  test("rated producer writes the whole run in one job, the rows 1 s ticks would write") {
+    val t = graft.streaming.FileTopics(
+      java.nio.file.Files.createTempDirectory("graft-datagen").toString)
+    val tp = TrafficPatterns.parse("2s-4s:300%", 5) // three rate segments over 6 s
+    val sc = spark.sparkContext
+    val group = s"rated-producer-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val produced =
+      try {
+        sc.setJobGroup(group, "rated producer")
+        try RatedProducer.run(spark, t, "gen-topic", schema, tp, durationMs = 6000)
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.graft.ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(produced == 50)
+    assert(jobs.get == 1, s"one write expected, saw ${jobs.get} jobs")
+    // the per-tick output: one DataGen.rows batch per 1 s window, ids
+    // continuing from the previous window
+    val windows = (0L until 6000L by 1000L).map(w => tp.rowsBetween(w, w + 1000))
+    val starts = windows.scanLeft(0L)(_ + _)
+    val ticks = windows.zip(starts).map { case (n, start) =>
+      DataGen.rows(spark, schema, n, startId = start) }.reduce(_ union _)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(sorted(t.readAll(spark, "gen-topic", schema.structType)) == sorted(ticks))
   }
 }

@@ -11,7 +11,9 @@ import graft.statements.SqlStatement
   * transport. */
 class GraftRunnerSpec extends SparkSpec {
 
-  private def scaffold(): java.nio.file.Path = {
+  private def scaffold(processing: String =
+      "INSERT INTO output_results SELECT event_id, score * 2 AS boosted FROM input_events"
+  ): java.nio.file.Path = {
     val dir = Files.createTempDirectory("graft-project")
     Files.createDirectories(dir.resolve("sql"))
     Files.createDirectories(dir.resolve("schemas"))
@@ -37,8 +39,7 @@ class GraftRunnerSpec extends SparkSpec {
       """CREATE TABLE output_results (
         |  event_id STRING, boosted DOUBLE
         |) WITH ('connector' = 'kafka', 'topic' = '${OUTPUT_TOPIC}')""".stripMargin)
-    Files.writeString(dir.resolve("sql/03_create_processing.sql"),
-      "INSERT INTO output_results SELECT event_id, score * 2 AS boosted FROM input_events")
+    Files.writeString(dir.resolve("sql/03_create_processing.sql"), processing)
     dir
   }
 
@@ -156,6 +157,49 @@ class GraftRunnerSpec extends SparkSpec {
     assert(res.produced == 30)
     assert(res.outputRows >= 30)
     assert(res.status == "SUCCESS")
+  }
+
+  test("bounded run whose SQL filters out every row reports 0 output rows") {
+    val res = GraftRunner.run(spark, GraftRunner.Config(
+      projectDir = scaffold(
+        "INSERT INTO output_results SELECT event_id, score * 2 AS boosted FROM input_events WHERE score < 0"),
+      runDir = Files.createTempDirectory("graft-run"),
+      messageRate = 40, durationMs = 1000, generateReport = false))
+    assert(res.produced == 40)
+    assert(res.outputRows == 0)
+    assert(res.status == "SUCCESS")
+  }
+
+  test("an unreadable output topic fails the run instead of reporting 0 rows") {
+    // the only INSERT writes a mid topic; its SELECT plants a file in the
+    // output topic that is gzip by name but not by content, so the
+    // validating read of the output topic cannot decode it
+    val dir = Files.createTempDirectory("graft-unreadable")
+    Files.createDirectories(dir.resolve("sql"))
+    Files.createDirectories(dir.resolve("schemas"))
+    Files.writeString(dir.resolve("schemas/input.avsc"),
+      """{"type":"record","name":"InputEvent","namespace":"g","fields":[
+        |  {"name":"event_id","type":"string"},
+        |  {"name":"score","type":"double"}
+        |]}""".stripMargin)
+    Files.writeString(dir.resolve("sql/01_source.sql"),
+      "CREATE TABLE input_events (event_id STRING, score DOUBLE) WITH ('connector' = 'kafka', 'topic' = 'ur-in')")
+    Files.writeString(dir.resolve("sql/02_mid.sql"),
+      "CREATE TABLE mid_events (event_id STRING, score DOUBLE) WITH ('connector' = 'kafka', 'topic' = 'ur-mid')")
+    Files.writeString(dir.resolve("sql/03_out.sql"),
+      "CREATE TABLE output_results (event_id STRING, score DOUBLE) WITH ('connector' = 'kafka', 'topic' = 'ur-out')")
+    Files.writeString(dir.resolve("sql/04_stage.sql"),
+      "INSERT INTO mid_events SELECT plant_unreadable(event_id) AS event_id, score FROM input_events")
+    val runDir = Files.createTempDirectory("graft-ur-run")
+    val planted = runDir.resolve("topics/ur-out/part-00000-planted.json.gz").toString
+    spark.udf.register("plant_unreadable", (id: String) => {
+      Files.write(java.nio.file.Paths.get(planted), "not gzip".getBytes("UTF-8"))
+      id
+    })
+    val e = intercept[org.apache.spark.SparkException](GraftRunner.run(spark,
+      GraftRunner.Config(projectDir = dir, runDir = runDir, messageRate = 10,
+        durationMs = 1000, generateReport = false)))
+    assert(e.getMessage.contains("FAILED_READ_FILE") && e.getMessage.contains("planted.json.gz"))
   }
 
   test("destructive statement aborts the run before deployment") {
